@@ -1,0 +1,1 @@
+"""Benchmark of the spark-graft engine: see README.md in this directory."""

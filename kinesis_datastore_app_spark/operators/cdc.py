@@ -24,7 +24,7 @@ only hazard; the mitigation is the same salting used in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kinesis_datastore_app_spark.catalog import table
@@ -3182,6 +3182,28 @@ def _bucket_stem_stats(
     return out
 
 
+def bucket_spec_on(payload: dict | None, keys: list[str]) -> dict | None:
+    """The bucket-manifest spec of ``payload`` when its bucket columns
+    are exactly ``keys`` — the precondition for a partial commit on
+    those keys — else None (plain snapshot, or other bucket columns)."""
+    spec = (payload or {}).get("buckets")
+    if isinstance(spec, dict) and list(spec.get("cols") or []) == list(keys):
+        return spec
+    return None
+
+
+def touched_buckets_agg(keys: list[str], n: int) -> Column:
+    """Aggregate column: the set of bucket ids ``keys`` hash into under
+    an ``n``-bucket layout. Callers fold it into an action they already
+    run and hand the result to partial_bucket_payload as
+    ``precomputed_touched=(ids, n)``, so the touched set costs no job
+    of its own."""
+    from kinesis_datastore_app_spark.sources.cdf_stream import bucket_id_udf
+
+    kb = bucket_id_udf(keys, n)
+    return F.collect_set(kb(*[F.col(k) for k in keys]))
+
+
 def partial_bucket_payload(
     spark: SparkSession,
     root: str,
@@ -3376,23 +3398,78 @@ def merge_into(
     writers re-run the merge against the winner's state (full rebase).
 
     At 100 TB: cost is one keyed shuffle of touched-target + source
-    and the touched-bucket rewrite; the source side is O(|source|)."""
+    and the touched-bucket rewrite. The source is read ONCE and held
+    MEMORY_AND_DISK only for the merge's lifetime (O(|source|), OCC
+    retries included); the cardinality check and the touched-bucket
+    ids come back from ONE aggregate over it (a groupBy on the keys,
+    then a global agg: 4 jobs under AQE, replacing a 3-job duplicate
+    count and a 2-job distinct-bucket collect that each re-read the
+    source), never a scan of the target."""
+    from pyspark import StorageLevel
+
+    # Read the source ONCE (the _apply_feed_batch discipline): without
+    # the persist, the pre-pass aggregate, the slice join and any OCC
+    # rebase each re-evaluate the source plan — an RDD scan of a
+    # createDataFrame batch, or a whole upstream pipeline. Scoped
+    # strictly to this call.
+    source = source.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _merge_into_persisted(
+            spark,
+            root,
+            source,
+            keys,
+            matched_update,
+            matched_update_cond,
+            matched_delete_cond,
+            insert_not_matched,
+            check_duplicate_source,
+        )
+    finally:
+        source.unpersist(blocking=True)
+
+
+def _merge_into_persisted(
+    spark: SparkSession,
+    root: str,
+    source: DataFrame,
+    keys: list[str],
+    matched_update: dict[str, str] | None,
+    matched_update_cond: str,
+    matched_delete_cond: str | None,
+    insert_not_matched: bool,
+    check_duplicate_source: bool,
+) -> tuple[int, dict]:
     import os
     import uuid
 
     from kinesis_datastore_app_spark.txnlog import (
         PendingDeleteVectors,
         occ_commit,
+        read_latest,
     )
 
+    # ONE action over the persisted source for both driver-side facts
+    # (the feed-apply shape): the cardinality check as max(count) per
+    # key and — when the latest manifest is bucketed on the merge keys
+    # — the touched bucket ids, hashed once per distinct key. The ids
+    # ride into partial_bucket_payload as a precompute, re-validated
+    # there against each attempt's bucket count.
+    spec = bucket_spec_on(read_latest(root)[1], keys)
+    aggs = []
     if check_duplicate_source:
-        dup = (
-            source.groupBy(*[F.col(k) for k in keys])
+        aggs.append(F.max("_n").alias("_max_n"))
+    if spec is not None:
+        aggs.append(touched_buckets_agg(keys, int(spec["n"])).alias("_bs"))
+    pre_touched: tuple[list[int], int] | None = None
+    if aggs:
+        row = (
+            source.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
+            .agg(*aggs)
+            .collect()[0]
         )
-        if dup.count() > 0:
+        if check_duplicate_source and (row["_max_n"] or 0) > 1:
             raise ValueError(
                 "MERGE cardinality violation: the source has multiple "
                 f"rows per key {keys} — each matched target row would be "
@@ -3400,6 +3477,8 @@ def merge_into(
                 "or pass check_duplicate_source=False if it is "
                 "dedup-by-construction)"
             )
+        if spec is not None:
+            pre_touched = (sorted(int(b) for b in row["_bs"]), int(spec["n"]))
 
     def clauses(t: DataFrame) -> DataFrame:
         return _merge_clauses(
@@ -3423,10 +3502,8 @@ def merge_into(
                 "MERGE over unapplied vectors would resurrect purged "
                 "rows — compact first (compact_delete_vectors)"
             )
-        spec = (prev or {}).get("buckets")
-        if isinstance(spec, dict) and list(spec.get("cols") or []) == list(
-            keys
-        ):
+        spec = bucket_spec_on(prev, keys)
+        if spec is not None:
             if staged and staged["n"] == spec["n"]:
                 base, cur = staged["base"], dict(spec.get("dirs") or {})
                 changed = {
@@ -3473,7 +3550,14 @@ def merge_into(
                         payload["batch_id"] = prev["batch_id"]
                     return payload
             payload, audit = partial_bucket_payload(
-                spark, root, prev, keys, source, clauses, "merge"
+                spark,
+                root,
+                prev,
+                keys,
+                source,
+                clauses,
+                "merge",
+                precomputed_touched=pre_touched,
             )
             base = dict(spec.get("dirs") or {})
             out_dirs = payload["buckets"]["dirs"]
@@ -3504,6 +3588,7 @@ def merge_into(
                 },
             )
             return payload
+        spec = (prev or {}).get("buckets")
         if isinstance(spec, dict):
             raise ValueError(
                 f"MERGE keys {keys} do not match the table's bucket "

@@ -1348,10 +1348,9 @@ def _apply_feed_batch_persisted(
 
     from kinesis_datastore_app_spark.operators.cdc import (
         apply_feed,
+        bucket_spec_on,
         partial_bucket_payload,
-    )
-    from kinesis_datastore_app_spark.sources.cdf_stream import (
-        bucket_id_udf,
+        touched_buckets_agg,
     )
     from kinesis_datastore_app_spark.txnlog import (
         occ_commit,
@@ -1368,21 +1367,16 @@ def _apply_feed_batch_persisted(
     # there against the manifest's bucket count at apply time — a CAS
     # retry against a re-bucketed base recollects instead of trusting
     # a stale routing.
-    _, latest_payload = read_latest(root)
-    spec = (latest_payload or {}).get("buckets")
+    spec = bucket_spec_on(read_latest(root)[1], keys)
     pre_touched: tuple[list[int], int] | None = None
     aggs = [F.collect_set("version").alias("_vs")]
-    spec_ok = isinstance(spec, dict) and list(spec.get("cols") or []) == list(
-        keys
-    )
-    if spec_ok:
-        kb = bucket_id_udf(keys, int(spec["n"]))
-        aggs.append(F.collect_set(kb(*[F.col(k) for k in keys])).alias("_bs"))
+    if spec is not None:
+        aggs.append(touched_buckets_agg(keys, int(spec["n"])).alias("_bs"))
     row = batch_df.agg(*aggs).collect()[0]
     versions = sorted(row["_vs"])
     if not versions:
         return
-    if spec_ok:
+    if spec is not None:
         pre_touched = (sorted(int(b) for b in row["_bs"]), int(spec["n"]))
 
     def apply_steps(state: DataFrame) -> DataFrame:
@@ -1411,10 +1405,7 @@ def _apply_feed_batch_persisted(
                 f"derived table at {root} carries pending deletion "
                 "vectors; compact them before applying feed batches"
             )
-        spec = (prev or {}).get("buckets")
-        if isinstance(spec, dict) and list(spec.get("cols") or []) == list(
-            keys
-        ):
+        if bucket_spec_on(prev, keys) is not None:
             payload, _ = partial_bucket_payload(
                 sess,
                 root,

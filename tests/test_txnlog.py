@@ -2706,6 +2706,55 @@ def test_merge_partial_carries_untouched_buckets_by_reference(
     assert (7, 1070) in got_b and (7777, 5) in got_b
 
 
+def _merge_race(spark, monkeypatch, root, interloper_key, src_b, n=8):
+    """Race two MERGEs on one bucketed table: B merges ``src_b``, and
+    inside B's first CAS an interloper merges ``(interloper_key, 1)``
+    and wins. Returns (version, payload, state, B's
+    partial_bucket_payload calls)."""
+    from kinesis_datastore_app_spark import txnlog
+    from kinesis_datastore_app_spark.operators import cdc
+
+    _boot_bucketed(spark, root, n_keys=60, n_buckets=n)
+    calls = {"prepare": 0}
+    real_partial = cdc.partial_bucket_payload
+
+    def counting_partial(*a, **kw):
+        calls["prepare"] += 1
+        return real_partial(*a, **kw)
+
+    monkeypatch.setattr(cdc, "partial_bucket_payload", counting_partial)
+    real_cas = txnlog.cas_commit
+    fired = {"done": False}
+
+    def racing_cas(r, v, payload):
+        if not fired["done"] and r == root:
+            fired["done"] = True
+            src_a = spark.createDataFrame(
+                [(interloper_key, 1)], "k bigint, v bigint"
+            )
+            cdc.merge_into(
+                spark, root, src_a, ["k"],
+                matched_update={"v": "t.v + s.v"},
+            )
+        return real_cas(r, v, payload)
+
+    monkeypatch.setattr(txnlog, "cas_commit", racing_cas)
+    try:
+        b_calls_before = calls["prepare"]
+        cdc.merge_into(
+            spark, root, src_b, ["k"], matched_update={"v": "t.v + s.v"}
+        )
+        b_prepares = calls["prepare"] - b_calls_before - 1  # −interloper
+    finally:
+        monkeypatch.setattr(txnlog, "cas_commit", real_cas)
+        monkeypatch.setattr(cdc, "partial_bucket_payload", real_partial)
+    v, payload = txnlog.read_latest(root)
+    state = dict(
+        map(tuple, cdc.read_table_state(spark, root, v).collect())
+    )
+    return v, payload, state, b_prepares
+
+
 def test_merge_partial_disjoint_writers_fast_rebase(
     tmp_path, spark, monkeypatch
 ):
@@ -2716,9 +2765,6 @@ def test_merge_partial_disjoint_writers_fast_rebase(
     CONFLICTING pair (same bucket) must instead recompute against the
     winner's state (two computations) and still serialize to the
     sequential result."""
-    from kinesis_datastore_app_spark import txnlog
-    from kinesis_datastore_app_spark.operators import cdc
-
     n = 8
     # two keys in DIFFERENT buckets, two in the SAME bucket
     ka, kb = 7, None
@@ -2734,48 +2780,8 @@ def test_merge_partial_disjoint_writers_fast_rebase(
         root = str(
             tmp_path / f"race_{interloper_key}"
         )
-        _boot_bucketed(spark, root, n_keys=60, n_buckets=n)
-        calls = {"prepare": 0}
-        real_partial = cdc.partial_bucket_payload
-
-        def counting_partial(*a, **kw):
-            calls["prepare"] += 1
-            return real_partial(*a, **kw)
-
-        monkeypatch.setattr(cdc, "partial_bucket_payload", counting_partial)
-        real_cas = txnlog.cas_commit
-        fired = {"done": False}
-
-        def racing_cas(r, v, payload):
-            if not fired["done"] and r == root:
-                fired["done"] = True
-                src_a = spark.createDataFrame(
-                    [(interloper_key, 1)], "k bigint, v bigint"
-                )
-                cdc.merge_into(
-                    spark, root, src_a, ["k"],
-                    matched_update={"v": "t.v + s.v"},
-                )
-            return real_cas(r, v, payload)
-
-        monkeypatch.setattr(txnlog, "cas_commit", racing_cas)
-        try:
-            src_b = spark.createDataFrame(
-                [(kb, 2)], "k bigint, v bigint"
-            )
-            b_calls_before = calls["prepare"]
-            cdc.merge_into(
-                spark, root, src_b, ["k"], matched_update={"v": "t.v + s.v"}
-            )
-            b_prepares = calls["prepare"] - b_calls_before - 1  # −interloper
-        finally:
-            monkeypatch.setattr(txnlog, "cas_commit", real_cas)
-            monkeypatch.setattr(cdc, "partial_bucket_payload", real_partial)
-        v, payload = txnlog.read_latest(root)
-        state = dict(
-            map(tuple, cdc.read_table_state(spark, root, v).collect())
-        )
-        return v, payload, state, b_prepares
+        src_b = spark.createDataFrame([(kb, 2)], "k bigint, v bigint")
+        return _merge_race(spark, monkeypatch, root, interloper_key, src_b, n)
 
     # DISJOINT: interloper touches ka's bucket, B touches kb's
     v, payload, state, b_prepares = run_race(ka)
@@ -2800,10 +2806,91 @@ def test_merge_partial_disjoint_writers_fast_rebase(
     assert same_as_a  # silence unused (kept for clarity of bucket picking)
 
 
+def _counted_source(spark, rows):
+    """A (k, v) merge source whose key column goes through a Python
+    UDF bumping an accumulator — its value after a merge is how many
+    source rows the merge evaluated (the key feeds every read of the
+    source, so column pruning cannot skip the UDF)."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def bump(k):
+        acc.add(1)
+        return k
+
+    src = spark.createDataFrame(rows, "k0 bigint, v bigint").select(
+        bump("k0").alias("k"), "v"
+    )
+    return src, acc
+
+
+def test_merge_evaluates_source_once(tmp_path, spark, monkeypatch):
+    """merge_into reads its source exactly once — the cardinality
+    check, the touched-bucket ids, the slice join and any OCC rebase
+    all read the persisted rows — on the bucket-manifest partial path,
+    the plain-snapshot fallback, and through a disjoint and an
+    overlapping OCC race."""
+    from pyspark import StorageLevel
+
+    from kinesis_datastore_app_spark.operators.cdc import merge_into
+
+    rows = [(7, 1000), (11, 5), (7777, 3)]
+    upd = {"v": "t.v + s.v"}
+
+    root = str(tmp_path / "bucketed")
+    _boot_bucketed(spark, root)
+    src, acc = _counted_source(spark, rows)
+    merge_into(spark, root, src, ["k"], matched_update=upd)
+    assert acc.value == len(rows), "partial path re-read its source"
+    assert src.storageLevel == StorageLevel.NONE
+
+    flat = str(tmp_path / "flat")
+    os.makedirs(flat)
+
+    def write_flat(prev):
+        spark.createDataFrame(
+            [(k, k * 10) for k in range(1, 61)], "k bigint, v bigint"
+        ).write.parquet(os.path.join(flat, "s1"))
+        return "s1"
+
+    commit_snapshot(flat, write_flat)
+    src, acc = _counted_source(spark, rows)
+    merge_into(spark, flat, src, ["k"], matched_update=upd)
+    assert acc.value == len(rows), "snapshot fallback re-read its source"
+    assert src.storageLevel == StorageLevel.NONE
+
+    n = 8
+    kb = 11
+    b_buckets = {_bucket_of(kb, n), _bucket_of(9999, n)}
+    disjoint = next(
+        c for c in range(12, 300) if _bucket_of(c, n) not in b_buckets
+    )
+    overlapping = next(
+        c for c in range(12, 300) if _bucket_of(c, n) == _bucket_of(kb, n)
+    )
+    for interloper, rebase, prepares in (
+        (disjoint, "disjoint-overlay", 1),
+        (overlapping, None, 2),
+    ):
+        src, acc = _counted_source(spark, [(kb, 2), (9999, 4)])
+        v, payload, state, b_prepares = _merge_race(
+            spark, monkeypatch, str(tmp_path / f"race_{interloper}"),
+            interloper, src, n,
+        )
+        assert (payload.get("rebase"), b_prepares) == (rebase, prepares)
+        assert acc.value == 2, f"race vs {interloper} re-read the source"
+        assert state[kb] == kb * 10 + 2 and state[9999] == 4
+        assert state[interloper] == interloper * 10 + 1
+
+
 def test_merge_duplicate_source_keys_raise(tmp_path, spark):
     """r13 ADVICE (medium): MERGE with a source carrying duplicate key
     rows must raise the SQL/Delta cardinality error, never silently
     multiply the matched target row."""
+    from pyspark import StorageLevel
+
     from kinesis_datastore_app_spark.operators.cdc import merge_into
 
     root = str(tmp_path / "t")
@@ -2815,6 +2902,13 @@ def test_merge_duplicate_source_keys_raise(tmp_path, spark):
         merge_into(spark, root, dup, ["k"], matched_update={"v": "s.v"})
     # opt-out documented: dedup-by-construction sources may skip the check
     assert read_latest(root)[0] == 1  # nothing committed
+    # raised before any stem was written, and the source was released
+    assert not [d for d in os.listdir(root) if d.startswith("merge-")]
+    assert dup.storageLevel == StorageLevel.NONE
+    ok = spark.createDataFrame([(7, 1), (8, 2)], "k bigint, v bigint")
+    merge_into(spark, root, ok, ["k"], matched_update={"v": "s.v"})
+    assert read_latest(root)[0] == 2
+    assert ok.storageLevel == StorageLevel.NONE
 
 
 def test_feed_batch_partial_sparse_feed_carries_buckets(tmp_path, spark):

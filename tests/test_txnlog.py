@@ -18,8 +18,6 @@ import pytest
 
 from kinesis_datastore_app_spark.txnlog import (
     CommitConflict,
-    LeaseHeld,
-    WriterLease,
     cas_commit,
     commit_snapshot,
     occ_commit,
@@ -142,24 +140,6 @@ def test_cow_snapshot_interleaved_merge_is_serializable(tmp_path):
     assert final == {1: 10, 2: 25, 3: 7}
 
 
-def test_writer_lease_excludes_live_and_breaks_stale(tmp_path):
-    root = str(tmp_path / "state")
-    lease = WriterLease(root).acquire()
-    with pytest.raises(LeaseHeld):
-        WriterLease(root).acquire()
-    lease.release()
-    # released: next writer proceeds
-    with WriterLease(root):
-        pass
-    # crashed holder: lease file left behind with an expired heartbeat
-    # (stop the live beat first or it would re-touch the backdated file)
-    stale = WriterLease(root, ttl_s=0.0).acquire()
-    stale._hb_stop.set()
-    stale._hb_thread.join(timeout=5)
-    os.utime(stale.path, (0, 0))
-    WriterLease(root, ttl_s=600.0).acquire().release()
-
-
 def test_crash_between_stage_and_commit_stays_invisible(tmp_path):
     """A writer that stages work but dies before its CAS leaves the
     latest version untouched — readers never see the partial job."""
@@ -168,51 +148,6 @@ def test_crash_between_stage_and_commit_stays_invisible(tmp_path):
     # writer 2 "crashes": its staged tmp data exists, no commit happened
     (tmp_path / "t" / "orphan-staged-file").write_text("x")
     assert read_latest(root) == (1, {"files": ["a"]})
-
-
-def test_lease_heartbeat_keeps_long_holds_alive(tmp_path):
-    """Round-8 review finding: a holder running LONGER than the TTL must
-    stay protected (the background heartbeat keeps the lease live), and
-    a genuinely crashed holder must be breakable after ~ttl — not after
-    some multiple of it."""
-    import time
-
-    root = str(tmp_path / "state")
-    lease = WriterLease(root, ttl_s=0.3).acquire()
-    time.sleep(1.0)  # hold for >3x the TTL
-    with pytest.raises(LeaseHeld):
-        WriterLease(root, ttl_s=0.3).acquire()  # still protected
-    lease.release()
-    # crash: a holder that never heartbeats again (simulated by killing
-    # the beat and backdating) is breakable by the next writer
-    dead = WriterLease(root, ttl_s=0.3).acquire()
-    dead._hb_stop.set()
-    dead._hb_thread.join(timeout=5)
-    time.sleep(0.4)
-    WriterLease(root, ttl_s=0.3).acquire().release()
-
-
-def test_lease_acquire_retries_when_holder_releases_mid_race(tmp_path, monkeypatch):
-    """A release landing between a loser's failed O_EXCL and its stat
-    must read as 'free now' (retry wins), not a spurious LeaseHeld."""
-    root = str(tmp_path / "state")
-    holder = WriterLease(root).acquire()
-    contender = WriterLease(root)
-
-    real_stat = os.stat
-    released = []
-
-    def stat_after_release(path, *a, **kw):
-        if path == contender.path and not released:
-            holder.release()
-            released.append(True)
-            raise FileNotFoundError(path)
-        return real_stat(path, *a, **kw)
-
-    monkeypatch.setattr(os, "stat", stat_after_release)
-    contender.acquire()  # must succeed via retry, not raise LeaseHeld
-    monkeypatch.undo()
-    contender.release()
 
 
 def test_touch_refreshes_superseded_vintages(tmp_path, monkeypatch):
@@ -322,111 +257,6 @@ def test_vacuum_keeps_snapshot_shared_with_retained_version(tmp_path):
     assert dropped == [1, 2] and removed == []
     assert os.path.exists(snap)
     assert read_version(root, 3)["snapshot"] == "snap-shared"
-
-
-def test_release_by_expired_ex_holder_never_touches_live_lease(tmp_path):
-    """Round-8 ADVICE (medium): an ex-holder whose lease expired and was
-    broken must release as a NO-OP — the live holder's file is never
-    renamed aside (its heartbeat keeps running) and a third writer
-    cannot sneak in through a release window."""
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    stale = WriterLease(root, ttl_s=0.2)
-    stale.acquire()
-    stale._hb_stop.set()  # simulate a stalled holder: heartbeat dies
-    stale._hb_thread.join()
-    import time
-
-    time.sleep(0.3)  # let the lease expire un-beaten
-    live = WriterLease(root, ttl_s=0.2).acquire()  # breaks the stale lease
-    try:
-        live_mtime = os.stat(live.path).st_mtime
-        stale.release()  # expired ex-holder: must not touch the file
-        assert os.path.exists(live.path), "live lease renamed aside by ex-holder"
-        with open(live.path) as f:
-            assert f.read() == live.token
-        # and a fresh acquire still sees the LIVE lease (no window opened)
-        with pytest.raises(LeaseHeld):
-            WriterLease(root, ttl_s=60.0).acquire()
-        assert os.stat(live.path).st_mtime >= live_mtime
-    finally:
-        live.release()
-    assert not os.path.exists(live.path)
-
-
-def test_heartbeat_survives_transient_file_blip(tmp_path):
-    """Round-8 ADVICE (medium, second half): the heartbeat must retry a
-    transiently missing lease file (the release link-back window)
-    instead of exiting permanently on the first OSError — and must STOP
-    (not adopt) when the file belongs to another writer."""
-    import time
-
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    lease = WriterLease(root, ttl_s=0.6).acquire()
-    try:
-        # transient blip: file vanishes briefly, then comes back
-        aside = lease.path + ".blip"
-        os.rename(lease.path, aside)
-        time.sleep(0.3)  # a beat or two hits the missing file
-        os.rename(aside, lease.path)
-        old = os.stat(lease.path).st_mtime
-        deadline = time.time() + 3
-        while time.time() < deadline and os.stat(lease.path).st_mtime <= old:
-            time.sleep(0.05)
-        assert os.stat(lease.path).st_mtime > old, (
-            "heartbeat died on the transient blip"
-        )
-        assert lease._hb_thread.is_alive()
-        # ownership change: heartbeat must stop, not refresh a foreign lease
-        with open(lease.path, "w") as f:
-            f.write("someone-else")
-        lease._hb_thread.join(timeout=3)
-        assert not lease._hb_thread.is_alive(), (
-            "heartbeat kept touching a lease it no longer owns"
-        )
-    finally:
-        lease.release()
-    # release was a no-op on the foreign lease
-    with open(lease.path) as f:
-        assert f.read() == "someone-else"
-
-
-def test_stale_break_restat_spares_revived_lease(tmp_path):
-    """Round-8 ADVICE (low): the breaker re-stats immediately before the
-    rename — a lease revived (touched) after the first stat must raise
-    LeaseHeld instead of being broken."""
-    import time
-
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    holder = WriterLease(root, ttl_s=0.2)
-    holder.acquire()
-    holder._hb_stop.set()
-    holder._hb_thread.join()
-    time.sleep(0.3)  # expired by age
-
-    breaker = WriterLease(root, ttl_s=0.2)
-    real_stat = os.stat
-    calls = {"n": 0}
-
-    def stat_with_revival(path, *a, **kw):
-        st = real_stat(path, *a, **kw)
-        if path == breaker.path:
-            calls["n"] += 1
-            if calls["n"] == 2:
-                # delayed heartbeat lands between first stat and re-stat
-                os.utime(path)
-                return real_stat(path, *a, **kw)
-        return st
-
-    import unittest.mock as mock
-
-    with mock.patch("os.stat", side_effect=stat_with_revival):
-        with pytest.raises(LeaseHeld, match="revived|live"):
-            breaker.acquire()
-    with open(holder.path) as f:
-        assert f.read() == holder.token, "revived lease was broken anyway"
 
 
 def test_vacuum_reports_shared_dropped_snapshot_once(tmp_path):
@@ -728,36 +558,6 @@ def test_vacuum_collects_aged_txn_tmp_files(tmp_path):
     vacuum(root, retain_last=2, orphan_grace_s=300.0)
     assert not os.path.exists(aged), "crashed writer's tmp never collected"
     assert os.path.exists(fresh), "in-flight commit's tmp swept inside grace"
-
-
-def test_manual_heartbeat_is_token_checked(tmp_path):
-    """Round-10 review: heartbeat() must refresh only OUR lease — an
-    expired ex-holder's unconditional utime would keep a NEW holder's
-    lock file forever fresh, and after that holder crashes every
-    acquire() sees a live lease: permanent livelock."""
-    import time
-
-    root = str(tmp_path / "hb")
-    lease = WriterLease(root, ttl_s=60.0)
-    lease.acquire()
-    try:
-        # broken + reacquired by another writer: foreign token in place
-        with open(lease.path, "w") as f:
-            f.write("someone-else")
-        past = time.time() - 120
-        os.utime(lease.path, (past, past))
-        lease.heartbeat()
-        assert os.stat(lease.path).st_mtime == pytest.approx(past), (
-            "heartbeat refreshed a lease it does not hold"
-        )
-        # restore our token: now the touch must land
-        with open(lease.path, "w") as f:
-            f.write(lease.token)
-        os.utime(lease.path, (past, past))
-        lease.heartbeat()
-        assert os.stat(lease.path).st_mtime > past + 60
-    finally:
-        lease.release()
 
 
 def test_vacuum_skips_sweep_on_empty_log_table(tmp_path):
@@ -1126,6 +926,33 @@ def test_scheme_scan_is_conservative_when_version_vanishes(tmp_path):
         assert f.read() == "mixed", "sticky marker downgraded"
 
 
+def _sink_rollup_oracle(df):
+    """The serial per-user rollup txnlog_sink_batch maintains."""
+    from pyspark.sql import functions as F
+
+    return {
+        r["user_id"]: (r["last_status"], r["n_events"])
+        for r in df.groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.col("event_type"), F.struct(F.col("ts"), F.col("event_id"))
+            ).alias("last_status"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .collect()
+    }
+
+
+def _sink_state(spark, root):
+    from kinesis_datastore_app_spark import txnlog
+
+    snap = txnlog.snapshot_path(root, txnlog.read_latest(root)[1])
+    return {
+        r["user_id"]: (r["last_status"], r["n_events"])
+        for r in spark.read.parquet(snap).collect()
+    }
+
+
 def test_txnlog_sink_batch_id_survives_interleaved_commits(tmp_path, spark):
     """Round-11 review: the sink's exactly-once high-water mark must be
     found THROUGH interleaved non-sink commits whose payloads carry no
@@ -1171,24 +998,86 @@ def test_txnlog_sink_batch_id_survives_interleaved_commits(tmp_path, spark):
     )
     # and the next real batch still applies
     txnlog_sink_batch(root, batches[2], 2)
+    assert _sink_state(spark, root) == _sink_rollup_oracle(e)
 
-    snap = txnlog.snapshot_path(root, txnlog.read_latest(root)[1])
-    got = {
-        r["user_id"]: (r["last_status"], r["n_events"])
-        for r in spark.read.parquet(snap).collect()
-    }
-    expect = {
-        r["user_id"]: (r["last_status"], r["n_events"])
-        for r in e.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.col("event_type"), F.struct(F.col("ts"), F.col("event_id"))
-            ).alias("last_status"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == expect
+
+def test_txnlog_sink_batch_cas_race(tmp_path, spark, monkeypatch):
+    """The streaming sink's multi-writer safety is the OCC commit, so
+    race it inside the CAS (the _merge_race pattern): (a) an interloper
+    REDELIVERS the same batch id and wins — exactly one version lands
+    and the loser stops at its rebase without writing again or
+    double-counting n_events; (b) an interloper commits a MAINTENANCE
+    snapshot (a compaction that purges one user) and wins — the sink
+    rebases onto it, and the final state equals the serial per-user
+    oracle."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from kinesis_datastore_app_spark import txnlog
+    from kinesis_datastore_app_spark.catalog import table
+    from kinesis_datastore_app_spark.streaming.queries import txnlog_sink_batch
+    from tests.conftest import SF_SMOKE
+
+    e = table(spark, SF_SMOKE, "events")
+    batches = [
+        e.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)
+    ]
+
+    def race(root, interloper):
+        real_cas = txnlog.cas_commit
+        fired = {"done": False}
+
+        def racing_cas(r, v, payload):
+            if not fired["done"] and r == root:
+                fired["done"] = True
+                interloper()
+            return real_cas(r, v, payload)
+
+        monkeypatch.setattr(txnlog, "cas_commit", racing_cas)
+        try:
+            txnlog_sink_batch(root, batches[1], 1)
+        finally:
+            monkeypatch.setattr(txnlog, "cas_commit", real_cas)
+        assert fired["done"]
+
+    # (a) same-batch redelivery inside the CAS
+    root = str(tmp_path / "redeliver")
+    txnlog_sink_batch(root, batches[0], 0)
+    race(root, lambda: txnlog_sink_batch(root, batches[1], 1))
+    assert txnlog.list_versions(root) == [1, 2]
+    assert txnlog.read_version(root, 2)["batch_id"] == 1
+    # two staged attempts (winner + loser's first), no re-write on rebase
+    staged = [d for d in os.listdir(root) if d.startswith("snap-b1-")]
+    assert len(staged) == 2, staged
+    assert _sink_state(spark, root) == _sink_rollup_oracle(
+        batches[0].unionByName(batches[1])
+    ), "loser double-counted the redelivered batch"
+
+    # (b) maintenance snapshot inside the CAS: a compaction that also
+    # purges one user, so a rebase onto the stale base would show
+    root = str(tmp_path / "maintenance")
+    txnlog_sink_batch(root, batches[0], 0)
+    purged = batches[0].select(F.min("user_id")).collect()[0][0]
+
+    def purge(prev_dir):
+        name = f"compact-{uuid.uuid4().hex[:8]}"
+        spark.read.parquet(prev_dir).filter(
+            F.col("user_id") != purged
+        ).coalesce(1).write.parquet(os.path.join(root, name))
+        return name
+
+    race(root, lambda: commit_snapshot(root, purge))
+    assert txnlog.list_versions(root) == [1, 2, 3]
+    assert txnlog.read_version(root, 2)["snapshot"].startswith("compact-")
+    assert txnlog.read_version(root, 3)["batch_id"] == 1
+    txnlog_sink_batch(root, batches[2], 2)
+    serial = (
+        batches[0].filter(F.col("user_id") != purged)
+        .unionByName(batches[1])
+        .unionByName(batches[2])
+    )
+    assert _sink_state(spark, root) == _sink_rollup_oracle(serial)
 
 
 def test_cdf_stream_diff_preserves_int64_with_nulls(tmp_path):
